@@ -75,20 +75,20 @@ object Complexity {
     * sequential driver RPCs inside every cache decision; this is
     * O(directories). Files missing from a listing (moved mid-probe) fall
     * back to an individual probe. */
-  def inputFileSizesGb(df: DataFrame): Seq[Double] = {
-    val files = try df.inputFiles.toSeq catch { case _: Throwable => Seq.empty }
+  def inputFileSizesGb(df: DataFrame): Seq[Double] =
+    inputFileSizesGb(Freshness.InputListing(df))
+
+  /** Sizes from a listing the freshness probe may already have made. */
+  private[graft] def inputFileSizesGb(inputs: Freshness.InputListing): Seq[Double] = {
+    val files = try inputs.files.toSeq catch { case _: Throwable => Seq.empty }
     if (files.isEmpty) return Seq.empty
-    val conf = df.sparkSession.sparkContext.hadoopConfiguration
     val byDir = files.map(new Path(_)).groupBy(_.getParent)
     byDir.toSeq.flatMap { case (dir, paths) =>
-      val listed: Map[String, Long] =
-        try {
-          val fs = dir.getFileSystem(conf)
-          fs.listStatus(dir).map(st => st.getPath.getName -> st.getLen).toMap
-        } catch { case _: Throwable => Map.empty }
+      val listed: Map[String, Long] = inputs.listStatus(dir)
+        .fold(Map.empty[String, Long])(_.map(st => st.getPath.getName -> st.getLen).toMap)
       paths.flatMap { p =>
         listed.get(p.getName).orElse {
-          try Some(p.getFileSystem(conf).getFileStatus(p).getLen)
+          try Some(p.getFileSystem(inputs.conf).getFileStatus(p).getLen)
           catch { case _: Throwable => None }
         }.map(_.toDouble / (1024.0 * 1024 * 1024))
       }
@@ -141,8 +141,13 @@ object Complexity {
   /** (complexity, multiplier, totalSizeGb) for a DataFrame (reference
     * `qce.py:202-257`): zero input size still yields a plan multiplier;
     * an unreadable plan degrades to multiplier 1.0. */
-  def estimate(df: DataFrame): (Double, Double, Double) = {
-    val totalSize = inputFileSizesGb(df).sum
+  def estimate(df: DataFrame): (Double, Double, Double) =
+    estimate(df, Freshness.InputListing(df))
+
+  /** [[estimate]] over a listing shared with the freshness probe. */
+  private[graft] def estimate(
+      df: DataFrame, inputs: Freshness.InputListing): (Double, Double, Double) = {
+    val totalSize = inputFileSizesGb(inputs).sum
     if (CacheConfig.current.useTreeEstimator) {
       val m = try multiplierFromTree(df) catch { case _: Throwable => 1.0 }
       return (totalSize * m, m, totalSize)

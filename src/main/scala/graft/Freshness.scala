@@ -4,8 +4,9 @@ import java.time.format.DateTimeFormatter
 import java.time.{Instant, LocalDateTime, ZoneOffset}
 
 import scala.collection.immutable.ListMap
+import scala.collection.mutable
 
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.DataFrame
 
 /** Input-source freshness probe.
@@ -22,8 +23,8 @@ object Freshness {
   val SchemaChangedPlaceholder = "<schema_changed_placeholder>"
   val DirectDataCacheMarker = "<direct_data_cache>"
 
-  /** Timestamp format used in metadata text (reference
-    * `core_caching.py:378`: `%Y-%m-%d %H:%M:%S`). */
+  /** Timestamp format of creation times in metadata text and the cache
+    * registry (reference `core_caching.py:378`: `%Y-%m-%d %H:%M:%S`). */
   val TsFormat: DateTimeFormatter =
     DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss")
 
@@ -31,6 +32,40 @@ object Freshness {
     LocalDateTime
       .ofInstant(Instant.ofEpochMilli(millis), ZoneOffset.UTC)
       .format(TsFormat)
+
+  /** Format of the input-directory modification times in a fingerprint:
+    * milliseconds, so a data version written within the same second as
+    * the one before still changes the fingerprint. Only freshness
+    * entries use it; creation times keep [[TsFormat]]. */
+  private val ModTimeFormat: DateTimeFormatter =
+    DateTimeFormatter.ofPattern("yyyy-MM-dd HH:mm:ss.SSS")
+
+  private def formatModTime(millis: Long): String =
+    LocalDateTime
+      .ofInstant(Instant.ofEpochMilli(millis), ZoneOffset.UTC)
+      .format(ModTimeFormat)
+
+  /** One look at a query's input files for one call: the file list is
+    * fetched at most once and each directory listed at most once, so the
+    * freshness probe and the cost model's input sizing share a single
+    * listing per `cacheToDbfs` call. */
+  private[graft] final class InputListing(
+      fetchFiles: => Array[String],
+      val conf: org.apache.hadoop.conf.Configuration) {
+    lazy val files: Array[String] = fetchFiles
+    private val listed = mutable.HashMap.empty[Path, Option[Array[FileStatus]]]
+
+    /** The directory's children; None when it cannot be listed. */
+    def listStatus(dir: Path): Option[Array[FileStatus]] =
+      listed.getOrElseUpdate(dir,
+        try Some(dir.getFileSystem(conf).listStatus(dir))
+        catch { case _: Throwable => None })
+  }
+
+  private[graft] object InputListing {
+    def apply(df: DataFrame): InputListing =
+      new InputListing(df.inputFiles, df.sparkSession.sparkContext.hadoopConfiguration)
+  }
 
   /** Max modification time per input directory, formatted, in sorted dir
     * order (reference `core_caching.py:212-297`). Special results:
@@ -41,7 +76,11 @@ object Freshness {
     * (`^<cacheDir>/<32hex>/?$`, reference `:289-293`) so cache-on-cache
     * reads don't self-invalidate.
     */
-  def inputDirModTimes(df: DataFrame): ListMap[String, String] = {
+  def inputDirModTimes(df: DataFrame): ListMap[String, String] =
+    inputDirModTimes(df, InputListing(df))
+
+  private[graft] def inputDirModTimes(
+      df: DataFrame, inputs: InputListing): ListMap[String, String] = {
     val cfg = CacheConfig.current
     val plan = PlanFingerprint.getQueryPlan(df)
 
@@ -51,14 +90,11 @@ object Freshness {
         .findCatalogTablePattern(plan, cfg.cacheDatabase, "data_")
         .isDefined) return ListMap.empty
 
-    val inputFiles: Array[String] = inputFilesSafe(df.inputFiles) match {
-      case Left(special) => return special
-      case Right(files) => files
+    inputFilesSafe(inputs.files) match {
+      case Left(special) => special
+      case Right(files) if files.isEmpty => ListMap.empty
+      case Right(_) => dirModTimes(inputs)
     }
-    if (inputFiles.isEmpty) return ListMap.empty
-
-    dirModTimesForFiles(inputFiles,
-      df.sparkSession.sparkContext.hadoopConfiguration)
   }
 
   /** `inputFiles` fetch with the reference's error contract
@@ -88,17 +124,20 @@ object Freshness {
     * subtrees (auto-substitution) where no DataFrame exists. */
   def dirModTimesForFiles(
       inputFiles: Array[String],
-      hadoopConf: org.apache.hadoop.conf.Configuration): ListMap[String, String] = {
+      hadoopConf: org.apache.hadoop.conf.Configuration): ListMap[String, String] =
+    dirModTimes(new InputListing(inputFiles, hadoopConf))
+
+  private def dirModTimes(inputs: InputListing): ListMap[String, String] = {
     val cfg = CacheConfig.current
     val cacheDirBase = cfg.cacheDirSlash.stripSuffix("/")
     val cacheDirRe =
       ("^" + java.util.regex.Pattern.quote(cacheDirBase) +
         "/[a-f0-9]{32}/?$").r
 
-    val dirs = inputFiles.map(f => new Path(f).getParent.toString).distinct
-    val entries = dirs.sorted.flatMap { d =>
-      if (cacheDirRe.findFirstIn(stripScheme(d)).isDefined) None
-      else lastModTimeOfDir(d, hadoopConf).map(d -> _)
+    val dirs = inputs.files.map(f => new Path(f).getParent).distinct
+    val entries = dirs.sortBy(_.toString).flatMap { d =>
+      if (cacheDirRe.findFirstIn(stripScheme(d.toString)).isDefined) None
+      else lastModTimeOfDir(d, inputs).map(d.toString -> _)
     }
     ListMap(entries.toIndexedSeq: _*)
   }
@@ -108,14 +147,12 @@ object Freshness {
 
   /** Newest mod time among a dir's non-`_delta_log` children, falling back
     * to the dir's own mod time (reference `core_caching.py:217-240`). */
-  private def lastModTimeOfDir(
-      dir: String,
-      conf: org.apache.hadoop.conf.Configuration): Option[String] =
-    try {
-      val path = new Path(dir)
-      val fs = path.getFileSystem(conf)
-      val listed = fs.listStatus(path).filterNot(_.getPath.getName == "_delta_log")
-      if (listed.isEmpty) Some(formatMillis(fs.getFileStatus(path).getModificationTime))
-      else Some(formatMillis(listed.map(_.getModificationTime).max))
-    } catch { case _: Throwable => None }
+  private def lastModTimeOfDir(dir: Path, inputs: InputListing): Option[String] =
+    inputs.listStatus(dir).flatMap { children =>
+      val kept = children.filterNot(_.getPath.getName == "_delta_log")
+      try Some(formatModTime(
+        if (kept.isEmpty) dir.getFileSystem(inputs.conf).getFileStatus(dir).getModificationTime
+        else kept.map(_.getModificationTime).max))
+      catch { case _: Throwable => None }
+    }
 }

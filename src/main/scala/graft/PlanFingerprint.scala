@@ -165,10 +165,11 @@ object PlanFingerprint {
     catch { case e: Throwable => s"Error: ${e.getMessage}" }
 
   /** MD5 hex digest over UTF-8 bytes (reference `core_caching.py:399`). */
-  def md5Hex(s: String): String = {
-    val d = MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8"))
-    d.map(b => f"$b%02x").mkString
-  }
+  def md5Hex(s: String): String =
+    hex(MessageDigest.getInstance("MD5").digest(s.getBytes("UTF-8")))
+
+  private[graft] def hex(digest: Array[Byte]): String =
+    digest.map(b => f"$b%02x").mkString
 
   /** Find `hive_metastore.{db}.{prefix}<32hex>` or
     * `spark_catalog.{db}.{prefix}<32hex>` in plan/metadata text and return

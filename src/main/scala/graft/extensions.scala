@@ -68,7 +68,9 @@ object extensions {
         return df
       }
 
-      val inputInfo = Freshness.inputDirModTimes(df)
+      // One listing of the inputs serves freshness and the cost model.
+      val inputs = Freshness.InputListing(df)
+      val inputInfo = Freshness.inputDirModTimes(df, inputs)
       CacheIO.readCacheIfExist(df, Some(plan), Some(inputInfo)) match {
         case Some(hit) =>
           PlanFingerprint.log("Returning existing cache.")
@@ -81,7 +83,7 @@ object extensions {
         case None => ()
       }
 
-      val (complexity, multiplier, _) = Complexity.estimate(df)
+      val (complexity, multiplier, _) = Complexity.estimate(df, inputs)
       val skipComplexity = dbfsCacheComplexityThreshold.exists(t =>
         t > 0 && complexity < t)
       val skipMultiplier = dbfsCacheMultiplierThreshold.exists(t =>

@@ -65,7 +65,7 @@ class CacheBehaviorSpec extends AnyFunSuite {
 
   test("data change invalidates: overwritten source yields a new hash") {
     val h0 = CacheIO.tableHash(ordersAgg())
-    Thread.sleep(1100) // mod-time resolution is 1s in the metadata format
+    Thread.sleep(1100) // the rewrite's mtime must be later than the first write's
     spark.read
       .parquet(s"${TestSpark.sf0001}/orders.parquet")
       .write.mode("overwrite").parquet(s"$srcDir/orders")

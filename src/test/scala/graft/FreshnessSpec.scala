@@ -20,7 +20,7 @@ class FreshnessSpec extends AnyFunSuite {
     assert(m.size == 1)
     val (dir, ts) = m.head
     assert(dir.endsWith("sf0.001"))
-    assert(ts.matches("\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}"))
+    assert(ts.matches("\\d{4}-\\d{2}-\\d{2} \\d{2}:\\d{2}:\\d{2}\\.\\d{3}"))
   }
 
   test("_delta_log children are excluded from the freshness probe") {
@@ -67,6 +67,41 @@ class FreshnessSpec extends AnyFunSuite {
         col("n_regionkey") === col("r_regionkey")))
     assert(m2.size == 2)
     assert(m2.keys.toSeq == m2.keys.toSeq.sorted)
+  }
+
+  test("a rewrite 300 ms later within the same second misses the cache") {
+    val d = Files.createTempDirectory("graft-fresh-ms").toFile
+    spark.read.parquet(s"${TestSpark.sf0001}/nation.parquet")
+      .write.mode("overwrite").parquet(s"$d/t")
+    val children = new java.io.File(d, "t").listFiles()
+    val part = children.filter(_.getName.endsWith(".parquet")).head
+    val t0 = 1700000000100L // 100 ms into its second
+    children.foreach(f => assert(f.setLastModified(t0)))
+    def query() = spark.read.parquet(s"$d/t").groupBy("n_regionkey").count()
+    def cacheIt() = query().cacheToDbfs(
+      overridePreferSparkCache = true,
+      dbfsCacheComplexityThreshold = None,
+      dbfsCacheMultiplierThreshold = None)
+    val written = CacheIO.tableHash(cacheIt())
+    assert(CacheIO.readCacheIfExist(query()).isDefined)
+    // same bytes, modified 300 ms later in the same second
+    Files.write(part.toPath, Files.readAllBytes(part.toPath))
+    assert(part.setLastModified(t0 + 300))
+    assert(CacheIO.readCacheIfExist(query()).isEmpty, "a newer data version must not hit")
+    assert(CacheIO.tableHash(cacheIt()) != written)
+  }
+
+  test("freshness and the cost model share one listing without changing either") {
+    val d = Files.createTempDirectory("graft-fresh-share").toString
+    val src = spark.read.parquet(s"${TestSpark.sf0001}/nation.parquet")
+    Seq("a", "b", "c").foreach(p => src.repartition(2).write.mode("overwrite").parquet(s"$d/$p"))
+    val df = spark.read.parquet(s"$d/a", s"$d/b", s"$d/c").groupBy("n_regionkey").count()
+    val inputs = Freshness.InputListing(df)
+    val fresh = Freshness.inputDirModTimes(df, inputs)
+    assert(fresh.size == 3 && fresh == Freshness.inputDirModTimes(df))
+    val sizes = Complexity.inputFileSizesGb(inputs)
+    assert(sizes.size == 6 && sizes == Complexity.inputFileSizesGb(df))
+    assert(Complexity.estimate(df, inputs) == Complexity.estimate(df))
   }
 
   test("direct-data catalog reads yield an empty source map") {
